@@ -7,8 +7,12 @@ corpus with known labels (reference tests/sct_dual_test.py:20-31 pattern).
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from titanlib_spark.webtext.extract import extract_text_py
@@ -153,6 +157,34 @@ def test_extract_matches_text_column(spark):
     assert bad == 0
 
 
+def _files_under(path):
+    return {os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs}
+
+
+def _job_ids(spark, group, fn):
+    """Run fn under a job group; return its result and the jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)  # status store is fed async
+    return result, sc.statusTracker().getJobIdsForGroup(group)
+
+
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+@pytest.fixture
+def static_overwrite(spark):
+    """Pin the session to static partition overwrite for one test."""
+    original = spark.conf.get(OVERWRITE_MODE)
+    spark.conf.set(OVERWRITE_MODE, "static")
+    yield
+    spark.conf.set(OVERWRITE_MODE, original)
+
+
 def test_checkpoint_resume(spark, tmp_path):
     from titanlib_spark.webtext.checkpoint import completed_parts, run_partitioned
 
@@ -163,14 +195,69 @@ def test_checkpoint_resume(spark, tmp_path):
     assert s1["parts_completed"] == 8
     assert s1["n_docs"] == 600
     assert completed_parts(spark, out) == set(range(8))
-    # second run: everything already done -> no work
-    s2 = run_partitioned(spark, pages, out, n_parts=8, cfg=cfg)
+    # second run: everything already done -> no work: only the progress
+    # read runs, and no (empty) progress file is appended
+    progress_files = _files_under(f"{out}/_progress")
+    s2, jobs = _job_ids(
+        spark, "checkpoint-rerun", lambda: run_partitioned(spark, pages, out, n_parts=8, cfg=cfg)
+    )
     assert s2["parts_skipped"] == 8
+    assert s2["parts_completed"] == 0
     assert s2["n_docs"] == 0
+    assert len(jobs) <= 1
+    assert _files_under(f"{out}/_progress") == progress_files
+    # part ids are url hash mod n_parts: another n_parts is refused
+    with pytest.raises(ValueError, match="n_parts"):
+        run_partitioned(spark, pages, out, n_parts=4, cfg=cfg)
     # output is complete and salted
     written = spark.read.parquet(f"{out}/pages_qc")
     assert written.count() == 600
     assert written.select("part_id").distinct().count() == 8
+
+
+def test_checkpoint_partial_resume(spark, static_overwrite, tmp_path):
+    """A rerun after only parts 0-3 were recorded processes exactly parts
+    4-7 and overwrites them in place: every url ends up written once, also
+    when the session itself is set to static partition overwrite, which
+    the run leaves as it found it."""
+    from titanlib_spark.webtext.checkpoint import (
+        PART_COL, completed_parts, run_partitioned, with_salted_partition,
+    )
+
+    out = str(tmp_path / "qc_out")
+    pages = generate_pages(spark, 600, seed=42)
+    cfg = QualityFilterConfig(run_ppl_stage=False)
+    run_partitioned(spark, pages, out, n_parts=8, cfg=cfg)
+    progress = spark.read.parquet(f"{out}/_progress")
+    kept = progress.where(F.col(PART_COL) < 4).collect()
+    shutil.rmtree(f"{out}/_progress")
+    spark.createDataFrame(kept, progress.schema).write.parquet(f"{out}/_progress")
+    assert completed_parts(spark, out) == {0, 1, 2, 3}
+
+    s2 = run_partitioned(spark, pages, out, n_parts=8, cfg=cfg)
+    assert s2["parts_completed"] == 4
+    assert s2["parts_skipped"] == 4
+    pending = with_salted_partition(pages, 8).where(F.col(PART_COL) >= 4).count()
+    assert 0 < s2["n_docs"] == pending < 600
+    assert completed_parts(spark, out) == set(range(8))
+    written = spark.read.parquet(f"{out}/pages_qc")
+    assert written.count() == 600
+    assert written.select("url").distinct().count() == 600
+    assert written.join(pages.select("url"), "url", "left_anti").count() == 0
+    assert spark.conf.get(OVERWRITE_MODE).lower() == "static"
+
+
+def test_checkpoint_unreadable_progress_raises(spark, tmp_path):
+    """Only a missing progress table means "nothing done"; a corrupt one
+    must not silently reprocess and overwrite every partition."""
+    from titanlib_spark.webtext.checkpoint import completed_parts
+
+    out = tmp_path / "qc_out"
+    assert completed_parts(spark, str(out)) == set()
+    (out / "_progress").mkdir(parents=True)
+    (out / "_progress" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        completed_parts(spark, str(out))
 
 
 def test_submit_entrypoint(spark, tmp_path):

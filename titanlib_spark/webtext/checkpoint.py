@@ -15,10 +15,14 @@ Design:
 * **Progress table** — one row per (run_id, part_id) appended *after* that
   partition's data is committed, carrying lineage (run_id, config hash,
   input path, wall time) and metrics (docs / kept / dropped / scrubbed).
-* **Resume** — a rerun anti-joins the pending parts against recorded
-  progress and processes only the remainder; dynamic partition overwrite
-  makes a crashed write idempotent (the partition is rewritten whole, and
-  its progress row only appears once the rewrite succeeded).
+* **Resume** — a rerun plans from the progress table before building
+  anything: when every part is recorded it returns at once (one job, the
+  progress read); otherwise it processes only the pending parts. Dynamic
+  partition overwrite (a per-write option, so the caller's session is left
+  alone) makes a crashed write idempotent (the partition is rewritten
+  whole, and its progress row only appears once the rewrite succeeded).
+  Each progress row records ``n_parts``; a rerun with another value is
+  refused, since it would map docs to other part ids.
 
 The writer targets plain parquet here (the container has no Iceberg
 catalog); `format="iceberg"` on a configured catalog is the drop-in
@@ -32,6 +36,7 @@ import time
 import uuid
 from dataclasses import asdict
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,12 +53,26 @@ def _progress_path(out_dir: str) -> str:
     return f"{out_dir.rstrip('/')}/_progress"
 
 
-def completed_parts(spark: SparkSession, out_dir: str) -> set[int]:
+def _read_progress(spark: SparkSession, out_dir: str) -> list:
+    """(part_id, n_parts) of every recorded progress row, in one job.
+
+    The explicit schema skips the parquet footer-inference job. Only a
+    missing table means "nothing done yet": an unreadable one raises, since
+    treating it as empty would silently reprocess and overwrite every
+    partition."""
     try:
-        rows = spark.read.parquet(_progress_path(out_dir)).select(PART_COL).distinct().collect()
-    except Exception:
-        return set()
-    return {r[PART_COL] for r in rows}
+        progress = spark.read.schema(f"{PART_COL} INT, n_parts INT").parquet(
+            _progress_path(out_dir)
+        )
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return []
+        raise
+    return progress.collect()
+
+
+def completed_parts(spark: SparkSession, out_dir: str) -> set[int]:
+    return {r[PART_COL] for r in _read_progress(spark, out_dir)}
 
 
 def run_partitioned(
@@ -66,17 +85,32 @@ def run_partitioned(
     output_format: str = "parquet",
 ) -> dict:
     """Run the quality pipeline over only the not-yet-completed partitions,
-    write salted output + progress, return the run summary dict."""
+    write salted output + progress, return the run summary dict.
+
+    A rerun must use the ``n_parts`` recorded in the progress table: part
+    ids are url hashes mod ``n_parts``, so another value maps docs to other
+    ids and would skip or double-write them."""
     from titanlib_spark.webtext.pipeline import QualityFilterConfig, run_quality_pipeline
 
     cfg = cfg or QualityFilterConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    progress = _read_progress(spark, out_dir)
+    recorded = {r["n_parts"] for r in progress}
+    if recorded and recorded != {n_parts}:
+        raise ValueError(
+            f"{out_dir} was written with n_parts in {recorded}; "
+            f"a rerun with n_parts={n_parts} would map docs to other part ids"
+        )
+    done = {r[PART_COL] for r in progress}
+    summary = {"run_id": run_id, "parts_completed": 0, "parts_skipped": len(done),
+               "n_docs": 0, "n_keep": 0, "n_drop": 0}
+    if len(done) == n_parts:
+        # nothing pending: no plan to build, nothing to write or read back
+        return {**summary, "wall_s": round(time.time() - t0, 3)}
 
     salted = with_salted_partition(pages, n_parts)
-    done = completed_parts(spark, out_dir)
     pending = salted.where(~F.col(PART_COL).isin(*done) if done else F.lit(True))
 
     result = run_quality_pipeline(pending, cfg)
@@ -94,13 +128,15 @@ def run_partitioned(
     (
         out.repartition(F.col(PART_COL))  # one shuffle; AQE coalesces small parts
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(PART_COL)
         .format(output_format)
         .save(f"{out_dir.rstrip('/')}/pages_qc")
     )
 
     # metrics over what was just written (read back: metrics reflect the
-    # committed bytes, not the pre-write plan)
+    # committed bytes, not the pre-write plan); aggregated once, and the
+    # progress rows are written from the collected result
     written = spark.read.format(output_format).load(f"{out_dir.rstrip('/')}/pages_qc")
     if done:
         written = written.where(~F.col(PART_COL).isin(*done))
@@ -116,14 +152,16 @@ def run_partitioned(
         .withColumn("config_json", F.lit(json.dumps(asdict(cfg), sort_keys=True)))
         .withColumn("completed_ts", F.current_timestamp())
         .withColumn("wall_s", F.lit(round(time.time() - t0, 3)))
+        .withColumn("n_parts", F.lit(n_parts))
     )
-    metrics.write.mode("append").parquet(_progress_path(out_dir))
-
     mrows = metrics.collect()
+    spark.createDataFrame(mrows, metrics.schema).write.mode("append").parquet(
+        _progress_path(out_dir)
+    )
+
     return {
-        "run_id": run_id,
+        **summary,
         "parts_completed": len(mrows),
-        "parts_skipped": len(done),
         "n_docs": sum(r["n_docs"] for r in mrows),
         "n_keep": sum(r["n_keep"] for r in mrows),
         "n_drop": sum(r["n_drop"] for r in mrows),
