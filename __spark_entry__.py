@@ -578,13 +578,13 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ngram_jaccard_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB dedup composition: exact n-gram Jaccard verified ONLY on
-    MinHash-LSH candidate pairs (md5 hash mode -> full DuckDB value
+    MinHash-LSH candidate pairs (md5 signatures -> full DuckDB value
     oracle over signatures, bands, candidates and the exact verify)."""
     from titanlib_spark.textops.dedup import ngram_jaccard_pairs_lsh
 
     d = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs_lsh(
-        d, id_col="doc_id", text_col="text", n=3, threshold=0.2, hash_fn="md5"
+        d, id_col="doc_id", text_col="text", n=3, threshold=0.2
     )
     return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
@@ -681,7 +681,7 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     kept = minhash_lsh_dedup(
         d, id_col="doc_id", text_col="text", threshold=0.7, num_hashes=64,
-        bands=16, hash_fn="md5",
+        bands=16,
     )
     return kept.select("doc_id").orderBy("doc_id")
 
@@ -690,7 +690,7 @@ def q_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full 64-slot MinHash signatures, value-hash-checked against DuckDB
     (md5-derived permutation hashes — identical integer math both sides)."""
     d = _t(spark, sf_dir, "documents")
-    sigs = minhash_signatures(d, num_hashes=64, shingle_size=5, hash_fn="md5")
+    sigs = minhash_signatures(d, num_hashes=64, shingle_size=5)
     return sigs.select(
         "doc_id", F.coalesce(F.col("minhash")[0], F.lit(-1)).alias("m0"),
         F.coalesce(F.col("minhash")[31], F.lit(-1)).alias("m31"),

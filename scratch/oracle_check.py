@@ -1,16 +1,21 @@
 """Rehearse the driver's correctness gate: run every queries() entry on
 Spark at sf0.01 and the matching oracle_sql() on DuckDB; compare row count,
-column names, and order-insensitive values (rounded doubles)."""
+column names, and order-insensitive values (rounded doubles).
+
+Run: python scratch/oracle_check.py [names...] — checks the checkout the
+script sits in, on local[$SPARK_GRAFT_CPUS] (local[8] when unset)."""
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a copy checks itself
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
 from titanlib_spark.session import get_spark
@@ -39,7 +44,8 @@ def normalize(rows, cols):
 
 
 def main(only=None):
-    spark = get_spark("oracle_check", master="local[8]", shuffle_partitions=16)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    spark = get_spark("oracle_check", master=f"local[{cpus}]", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -162,7 +162,6 @@ def main() -> None:
         materialize(
             ngram_jaccard_pairs_lsh(
                 docs, id_col="doc_id", text_col="text", n=3, threshold=0.2,
-                hash_fn="md5",
             )
         )
 

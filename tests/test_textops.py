@@ -151,13 +151,13 @@ def test_cosine_topk_kernel_bit_identical_to_column_fold(spark):
 def test_lsh_pair_gen_shapes_identical(spark):
     """pair_gen="explode" (nested-explode enumeration over sorted
     collect_list buckets) must emit the BYTE-IDENTICAL candidate set of
-    the default a×b self-join, in both hash modes, including ties and
-    the max_bucket cap boundary (r06 optimization; the oracle replays
-    the join semantics, so any divergence is a correctness bug)."""
+    the default a×b self-join, for both gram kinds (char 5-shingles, word
+    3-grams), including ties and the max_bucket cap boundary (r06
+    optimization; the oracle replays the join semantics, so any divergence
+    is a correctness bug)."""
     from titanlib_spark.textops.dedup import (
         minhash_lsh_candidates,
         minhash_signatures,
-        word_ngram_minhash_udf,
     )
 
     base = "alpha beta gamma delta epsilon zeta eta theta " * 4
@@ -167,18 +167,11 @@ def test_lsh_pair_gen_shapes_identical(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string").cache()
     docs.count()
 
-    for mode in ("md5", "xxhash64"):
-        if mode == "md5":
-            udf = word_ngram_minhash_udf(3, 64).asNondeterministic()
-            sigs = docs.select(
-                F.col("doc_id"), udf(F.col("text")).alias("minhash")
-            ).where(F.col("minhash").isNotNull())
-        else:
-            sigs = minhash_signatures(
-                docs, "text", 64, 5, id_col="doc_id", hash_fn=mode,
-                signatures_only=True,
-            )
-        sigs = sigs.localCheckpoint(eager=True)
+    for grams, n in (("char", 5), ("word", 3)):
+        sigs = minhash_signatures(
+            docs, "text", 64, n, id_col="doc_id", grams=grams,
+            signatures_only=True,
+        ).localCheckpoint(eager=True)
         # max_bucket=4 exercises the cap: the 12-doc near-dup family
         # overflows some buckets, which must drop identically both ways
         sets = {
@@ -186,16 +179,73 @@ def test_lsh_pair_gen_shapes_identical(spark):
                 map(
                     tuple,
                     minhash_lsh_candidates(
-                        sigs, "doc_id", "minhash", 16, 4, hash_fn=mode,
-                        pair_gen=pg,
+                        sigs, "doc_id", "minhash", 16, 4, pair_gen=pg,
                     ).collect(),
                 )
             )
             for pg in ("join", "explode")
         }
-        assert sets["join"] == sets["explode"], mode
+        assert sets["join"] == sets["explode"], grams
         sigs.unpersist()
     docs.unpersist()
+
+
+def test_minhash_kernel_matches_spark_grams(spark):
+    r"""The MinHash kernel must hash exactly the gram sets Spark's own
+    word_ngrams / char_shingles produce: the same Java-regex word split
+    (\s is ASCII-only — \xa0 and \x1c stay inside a word; leading and
+    trailing empty tokens are kept), the same trim/lower, the same NULL for
+    NULL, empty and shorter-than-n docs. The expected signature is computed
+    here from Spark's gram arrays with hashlib and the seeded (a, b)
+    formula."""
+    import hashlib
+
+    from titanlib_spark.textops.dedup import (
+        MERSENNE31,
+        _minhash_coeffs,
+        minhash_signatures,
+        word_ngrams,
+    )
+
+    rows = [
+        (0, "alpha\xa0beta gamma delta epsilon"),
+        (1, "alpha\x1cbeta gamma delta epsilon"),
+        (2, "alpha\tbeta gamma delta epsilon"),
+        (3, "\talpha beta gamma delta"),
+        (4, "alpha beta gamma delta   "),
+        (5, "Alpha BETA gamma Delta eps"),
+        (6, "ÄÖÜ STRASSE ist sehr lang"),
+        (11, "ÄÖÜ STRASSE"),
+        (7, None),
+        (8, ""),
+        (9, "ab cd"),
+        (10, "alpha beta gamma delta\n"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    a, b = _minhash_coeffs(64)
+
+    def expected(grams):
+        if not grams:
+            return None
+        hs = [
+            int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16) % MERSENNE31
+            for g in grams
+        ]
+        return [min((ai * h + bi) % MERSENNE31 for h in hs) for ai, bi in zip(a, b)]
+
+    for kind, n, gram_col in (
+        ("word", 3, word_ngrams("text", 3)),
+        ("char", 5, char_shingles("text", 5)),
+    ):
+        got = {
+            r.doc_id: (r.g, r.minhash)
+            for r in minhash_signatures(docs, "text", 64, n, grams=kind)
+            .withColumn("g", gram_col)
+            .collect()
+        }
+        assert len(got) == len(rows)
+        for doc_id, (grams, sig) in got.items():
+            assert sig == expected(grams), (kind, doc_id)
 
 
 def test_ngram_jaccard_lsh_matches_exact_verifier(spark):
@@ -219,9 +269,7 @@ def test_ngram_jaccard_lsh_matches_exact_verifier(spark):
     }
     gated = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs_lsh(
-            docs, n=3, threshold=0.3, hash_fn="md5"
-        ).collect()
+        for r in ngram_jaccard_pairs_lsh(docs, n=3, threshold=0.3).collect()
     }
     # every gated pair exists in the exact result with the SAME value
     for pair, j in gated.items():

@@ -1,13 +1,16 @@
 """Deduplication family: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
-All signature computation is JVM-side (xxhash64 over exploded/ transformed
-arrays inside whole-stage codegen) — no Python in the hot path. The LSH
-band -> bucket -> join shape is the standard shuffle-once candidate
-generation: at 100 TB the only shuffles are (1) groupBy on band bucket,
-(2) the verification join, both on uniformly-hashed keys (no skew by
-construction; a pathological bucket is bounded with a per-bucket cap, the
-`num_max` neighborhood-truncation idea from the reference,
-reference src/sct.cpp:130-146).
+MinHash signatures come from ONE row-local Arrow kernel (:func:`minhash_udf`:
+one Python md5 per distinct gram + vectorized numpy permutation math), the
+same kernel batch LSH and the streaming near-dup stage use, so every
+signature is bit-identical to its DuckDB twin. Everything else (shingles,
+SimHash, banding, candidate pairs, verification, winnowing) is JVM-side
+Catalyst. The LSH band -> bucket -> join shape is the standard
+shuffle-once candidate generation: at 100 TB the only shuffles are (1)
+groupBy on band bucket, (2) the verification join, both on
+uniformly-hashed keys (no skew by construction; a pathological bucket is
+bounded with a per-bucket cap, the `num_max` neighborhood-truncation idea
+from the reference, reference src/sct.cpp:130-146).
 """
 
 from __future__ import annotations
@@ -105,6 +108,71 @@ def char_shingles(text: str | Column, n: int = 5) -> Column:
     return let_bound(t0, shingles_of)
 
 
+# Java's \s, the class Spark's split(..., '\\s+') uses: ASCII whitespace
+# only. Python's \s also matches Unicode spaces (\xa0 from a decoded &nbsp;,
+# \x1c-\x1f, \u2000-\u200a, ...), which Spark keeps inside a word.
+_JAVA_WS = r"[ \t\n\x0b\f\r]+"
+
+
+def minhash_udf(n: int = 5, num_hashes: int = 64, grams: str = "char"):
+    """The MinHash kernel: an Arrow UDF text -> array<long> signature.
+
+    grams="char": distinct lowercase character n-shingles (the
+    :func:`char_shingles` set); grams="word": distinct word n-grams (the
+    :func:`word_ngrams` set — split(lower(trim(t)), \\s+) with Java's
+    ASCII-only \\s, leading and trailing empty tokens kept). Per gram
+    h = md5_hash64(gram) mod P; signature[i] = min over grams of
+    (a_i * h + b_i) mod P, P = 2^31-1, seeded coefficients — integer math,
+    so the signature is bit-identical to the DuckDB oracle's. NULL text and
+    docs with no gram (empty, shorter than n) yield NULL.
+
+    Row-local Python beats both JVM forms (rule 33): the gram explode ->
+    shuffle -> k min-aggregates ships every gram string through a shuffle,
+    and a per-row HOF twin runs k interpreted min-folds per gram (5.9x
+    slower)."""
+    if grams not in ("char", "word"):
+        raise ValueError(f"grams must be 'char' or 'word', got {grams!r}")
+    a_list, b_list = _minhash_coeffs(num_hashes)
+
+    @F.pandas_udf("array<long>")
+    def _sig(text: pd.Series) -> pd.Series:
+        import hashlib
+        import re
+
+        import numpy as np
+
+        a = np.asarray(a_list, dtype=np.int64)[:, None]
+        b = np.asarray(b_list, dtype=np.int64)[:, None]
+        ws = re.compile(_JAVA_WS)
+
+        def gram_set(t: str) -> set[str]:
+            if grams == "word":
+                toks = ws.split(t.strip(" ").lower())
+                return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+            low = t.lower()
+            return {low[i : i + n] for i in range(len(low) - n + 1)}
+
+        out = []
+        for t in text.to_numpy(dtype=object):
+            gs = gram_set(t) if isinstance(t, str) else ()
+            if not gs:
+                out.append(None)
+                continue
+            h = np.fromiter(
+                (
+                    int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
+                    % MERSENNE31
+                    for g in gs
+                ),
+                dtype=np.int64,
+                count=len(gs),
+            )[None, :]
+            out.append(((a * h + b) % MERSENNE31).min(axis=1).tolist())
+        return pd.Series(out, dtype=object)
+
+    return _sig
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -112,62 +180,33 @@ def minhash_signatures(
     shingle_size: int = 5,
     out_col: str = "minhash",
     id_col: str | None = None,
-    hash_fn: str = "xxhash64",
-    gram_fn=None,
+    grams: str = "char",
     signatures_only: bool = False,
 ) -> DataFrame:
-    """k-permutation MinHash over char shingles; signature[i] = min over
-    shingles of h_i(s). Empty/too-short docs get a null signature.
+    """k-permutation MinHash over the doc's `shingle_size`-grams (char
+    shingles, or word n-grams with grams="word"), computed by
+    :func:`minhash_udf`. Empty/too-short docs get a null signature.
 
-    hash_fn="xxhash64" (default): h_i(s) = xxhash64(str(i), s) — fastest,
-    JVM-only. hash_fn="md5": h_i(s) = (a_i * (md5_hash64(s) mod P) + b_i)
-    mod P with seeded coefficients — identical math is expressible in
-    DuckDB SQL, so the full signature is value-oracle-checkable.
+    The full-frame form adds `out_col` to every row of `df` (row-local, no
+    join). `signatures_only=True` returns just (id_col, out_col) rows for
+    docs with >=1 gram — the shape LSH banding wants; `id_col` defaults to
+    `doc_id`.
 
-    Physical plan: explode distinct shingles -> ONE groupBy with k
-    codegen'd min-aggregates -> assemble the signature array. The obvious
-    nested-transform expression (k lambdas over the shingle array) runs in
-    Spark's interpreted HOF path at ~100x the cost — same lesson as
-    simhash_table. Requires a row key; pass `id_col` or a unique id column
-    named `doc_id` must exist. `gram_fn` overrides the shingle expression
-    (e.g. word_ngrams) — it must yield a distinct array of strings.
-
-    `signatures_only=True` returns just (id_col, out_col) rows for docs
-    with >=1 shingle, skipping the join that re-attaches the signature to
-    the input frame — the shape LSH banding wants (it drops null
-    signatures anyway), one join fewer in the plan."""
+    The UDF is asNondeterministic (rule 34): a filter on its output would
+    otherwise make the optimizer evaluate it below the pushed filter AND in
+    the projection."""
     from titanlib_spark.session import spread_small_input
 
-    id_col = id_col or "doc_id"
-    sh = gram_fn(text_col) if gram_fn is not None else char_shingles(text_col, shingle_size)
-    # shingle generation + per-gram hashing is the map-side hot loop: spread
-    # a degenerately-partitioned input (single-file scan) across the cores
-    # before it runs; no-op on a well-partitioned table
-    exploded = spread_small_input(df).select(F.col(id_col), F.explode(sh).alias("_s"))
-    if hash_fn == "md5":
-        av, bv = _minhash_coeffs(num_hashes)
-        hmod = md5_hash64(F.col("_s")) % MERSENNE31
-        exploded = exploded.select(F.col(id_col), hmod.alias("_h"))
-        votes = exploded.groupBy(id_col).agg(
-            *[
-                F.min((F.lit(av[i]) * F.col("_h") + F.lit(bv[i])) % MERSENNE31).alias(
-                    f"_m{i}"
-                )
-                for i in range(num_hashes)
-            ]
-        )
-    else:
-        votes = exploded.groupBy(id_col).agg(
-            *[
-                F.min(F.xxhash64(F.lit(str(i)), F.col("_s"))).alias(f"_m{i}")
-                for i in range(num_hashes)
-            ]
-        )
-    sig = F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])
-    sigs = votes.select(F.col(id_col), sig.alias(out_col))
+    sig = minhash_udf(shingle_size, num_hashes, grams).asNondeterministic()
+    # per-gram hashing is the hot loop: spread a degenerately-partitioned
+    # input (single-file scan) across the cores before it runs; no-op on a
+    # well-partitioned table
+    src = spread_small_input(df)
     if signatures_only:
-        return sigs
-    return df.join(sigs, on=id_col, how="left")
+        return src.select(
+            F.col(id_col or "doc_id"), sig(F.col(text_col)).alias(out_col)
+        ).where(F.col(out_col).isNotNull())
+    return src.withColumn(out_col, sig(F.col(text_col)))
 
 
 def minhash_lsh_candidates(
@@ -176,18 +215,17 @@ def minhash_lsh_candidates(
     sig_col: str = "minhash",
     bands: int = 16,
     max_bucket: int = 1000,
-    hash_fn: str = "xxhash64",
     materialize: bool = False,
     pair_gen: str = "join",
 ) -> DataFrame:
     """Candidate pairs (a < b) sharing at least one LSH band bucket.
 
     Signature of length k is cut into `bands` rows-per-band groups; a band's
-    bucket key is the hash of its slice (hash_fn="md5": the raw int-array
-    slice itself — array equality IS slice equality, so the grouping is
-    bit-identical to the comma-joined string the DuckDB twin groups on,
-    without building 80-byte strings into three 8M-row shuffles; measured
-    r06 sf10: banded checkpoint 9.0->7.2s, count shuffle 2.0->1.4s).
+    bucket key is the raw int-array slice itself — array equality IS slice
+    equality, so the grouping is bit-identical to the comma-joined string
+    the DuckDB twin groups on, without building 80-byte strings into three
+    8M-row shuffles (measured r06 sf10: banded checkpoint 9.0->7.2s, count
+    shuffle 2.0->1.4s).
     Buckets larger than `max_bucket` are dropped FIRST via the broadcast
     anti-join (degenerate content, e.g. boilerplate — the reference's
     num_max truncation applied to LSH).
@@ -204,10 +242,10 @@ def minhash_lsh_candidates(
       max_bucket by the anti-join, so no pathological collect buffer) →
       nested-explode i<j enumeration. One shuffle of capped instead of
       the self-join's two: candidate stage 16.5 → 8.3s at 500k docs,
-      identical pair set (A/B: byte-equal at sf0.01/sf0.1/sf1-replica in
-      both hash modes, incl. a 15,417,234-pair dense case; i<j over a
-      sort_array'd list IS a<b within equal keys — sort_array uses the
-      id type's natural ordering, the old join's comparator). CAVEAT
+      identical pair set (A/B: byte-equal at sf0.01/sf0.1/sf1-replica,
+      incl. a 15,417,234-pair dense case; i<j over a sort_array'd list
+      IS a<b within equal keys — sort_array uses the id type's natural
+      ordering, the old join's comparator). CAVEAT
       (CLAUDE.md rule 40): Spark 4 checkpoints carry the PRE-checkpoint
       plan's size ESTIMATE as stats, and the Generate/aggregate chain
       here estimates ~KiB for what is really ~GiB of pairs — an unhinted
@@ -225,16 +263,13 @@ def minhash_lsh_candidates(
     sig = F.col(sig_col)
     k = F.size(sig)
     r = (k / bands).cast("int")
-    if hash_fn == "md5":
-        bucket_of = lambda b: F.slice(sig, b * r + 1, r)
-    else:
-        bucket_of = lambda b: F.xxhash64(
-            F.concat_ws(",", F.slice(sig, b * r + 1, r)), b.cast("string")
-        )
     banded = df.where(sig.isNotNull()).select(
         F.col(id_col),
         F.posexplode(
-            F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), bucket_of)
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.slice(sig, b * r + 1, r),
+            )
         ).alias("band", "bucket"),
     )
     if materialize:
@@ -315,7 +350,6 @@ def minhash_lsh_dedup(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_size: int = 5,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Drop near-duplicates: candidates from LSH buckets, verified by the
     MinHash Jaccard estimate, losers = the larger id of each verified pair
@@ -333,12 +367,10 @@ def minhash_lsh_dedup(
     the loser checkpoint (the minhash column was dropped from the result
     anyway, so the survivors never needed the signature lineage)."""
     sigs = minhash_signatures(
-        df, text_col, num_hashes, shingle_size, id_col=id_col, hash_fn=hash_fn,
+        df, text_col, num_hashes, shingle_size, id_col=id_col,
         signatures_only=True,
     ).localCheckpoint(eager=True)
-    cands = minhash_lsh_candidates(
-        sigs, id_col, "minhash", bands, hash_fn=hash_fn, materialize=True
-    )
+    cands = minhash_lsh_candidates(sigs, id_col, "minhash", bands, materialize=True)
     pairs = (
         cands.join(
             sigs.withColumnsRenamed({id_col: "id_a", "minhash": "sig_a"}), on="id_a"
@@ -519,61 +551,6 @@ def word_ngrams(text: str | Column, n: int = 3) -> Column:
     return let_bound(toks, grams_of)
 
 
-def word_ngram_minhash_udf(n: int = 3, num_hashes: int = 64):
-    """Arrow UDF: md5-mode MinHash signature over word n-grams, row-local.
-
-    Bit-identical to minhash_signatures(hash_fn="md5") over
-    :func:`word_ngrams` (same tokenization as split(lower(trim(t)), \\s+)
-    including Java split's leading-empty-token/trailing-empty-drop
-    behavior, same md5-derived 60-bit base hash, same seeded (a, b)
-    permutation mins — integer arithmetic throughout, so equality is
-    exact, and the `minhash_sigs` full-signature oracle pins it). Same
-    rule-33 economics as streaming's minhash_sig_udf: one Python md5 per
-    gram + vectorized numpy permutation math replaces the gram
-    explode -> shuffle -> 64 codegen'd min-aggregates (the explode ships
-    ~50 gram strings per doc through a shuffle; this ships nothing).
-    Docs with fewer than n tokens (or NULL text) yield NULL."""
-    a_list, b_list = _minhash_coeffs(num_hashes)
-
-    @F.pandas_udf("array<long>")
-    def _sig(text: pd.Series) -> pd.Series:
-        import hashlib
-        import re
-
-        import numpy as np
-
-        a = np.asarray(a_list, dtype=np.int64)[:, None]
-        b = np.asarray(b_list, dtype=np.int64)[:, None]
-        ws = re.compile(r"\s+")
-        out = []
-        for t in text.to_numpy(dtype=object):
-            if not isinstance(t, str):
-                out.append(None)
-                continue
-            toks = ws.split(t.strip(" ").lower())
-            if toks and toks[-1] == "":  # Java split drops trailing empties
-                toks.pop()
-            if len(toks) < n:
-                out.append(None)
-                continue
-            grams = {
-                " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-            }
-            h = np.fromiter(
-                (
-                    int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                    % MERSENNE31
-                    for g in grams
-                ),
-                dtype=np.int64,
-                count=len(grams),
-            )[None, :]
-            out.append(((a * h + b) % MERSENNE31).min(axis=1).tolist())
-        return pd.Series(out, dtype=object)
-
-    return _sig
-
-
 def ngram_jaccard_pairs_lsh(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -583,7 +560,6 @@ def ngram_jaccard_pairs_lsh(
     num_hashes: int = 64,
     bands: int = 16,
     max_bucket: int = 1000,
-    hash_fn: str = "xxhash64",
     broadcast_candidates: bool = True,
 ) -> DataFrame:
     """EXACT n-gram Jaccard, but only over MinHash-LSH candidate pairs —
@@ -601,14 +577,14 @@ def ngram_jaccard_pairs_lsh(
     gate recalls >99% of pairs at jaccard >= 0.5 (1-(1-s^4)^16).
 
     Materialization boundaries (each measured at sf1-scale, 50k docs,
-    local[32], r06): SIGNATURES are checkpointed — the candidate stage
-    consumes them through three plan branches (bucket counts + both
-    self-join sides) and would otherwise re-run the whole signature stage
-    per branch (13.3s -> 4.6s for the candidate stage). In md5 mode the
-    signature itself comes from ONE row-local Arrow pass
-    (:func:`word_ngram_minhash_udf`) instead of gram-checkpoint ->
-    explode -> shuffle -> 64 min-aggregates (grams 3.2s + sigs 4.4s ->
-    ~1.5s, and no gram shuffle at 100 TB). Gram arrays for the exact
+    local[32], r06): the signatures come from ONE row-local Arrow pass
+    (:func:`minhash_signatures` with grams="word") instead of
+    gram-checkpoint -> explode -> shuffle -> 64 min-aggregates (grams 3.2s
+    + sigs 4.4s -> ~1.5s, and no gram shuffle at 100 TB), and materialize
+    exactly once, in the banded checkpoint inside
+    :func:`minhash_lsh_candidates` — its three plan branches (bucket counts
+    + both pair-gen sides) would otherwise re-run the signature stage per
+    branch (13.3s -> 4.6s for the candidate stage). Gram arrays for the exact
     verify are computed only for the candidate ids (a broadcast semi-join
     of the bounded candidate list back onto the input), so the full-corpus
     gram arrays are never materialized at all. The RESULT is eagerly
@@ -623,28 +599,13 @@ def ngram_jaccard_pairs_lsh(
     stats, so AQE cannot discover they are small. Disable it if the
     candidate list itself is huge (very loose threshold over very dirty
     data); the joins then fall back to shuffle joins on the ids."""
-    from titanlib_spark.session import spread_small_input
-
-    if hash_fn == "md5":
-        # asNondeterministic: the isNotNull filter below otherwise makes
-        # the optimizer evaluate the UDF once below the pushed filter and
-        # AGAIN in the projection (guide-§4.4 duplication; measured 9-11s
-        # vs 1.1s at 50k docs). No sigs checkpoint: the banded checkpoint
-        # inside minhash_lsh_candidates is this plan's ONLY consumer of
-        # the signature column, so the UDF pass materializes exactly once
-        # there (the ngram path never needs the raw signature again)
-        sig_udf = word_ngram_minhash_udf(n, num_hashes).asNondeterministic()
-        sigs = (
-            spread_small_input(df)
-            .select(F.col(id_col), sig_udf(F.col(text_col)).alias("minhash"))
-            .where(F.col("minhash").isNotNull())
-        )
-    else:
-        sigs = minhash_signatures(
-            spread_small_input(df), text_col, num_hashes, id_col=id_col,
-            hash_fn=hash_fn, gram_fn=lambda t: word_ngrams(t, n),
-            signatures_only=True,
-        )
+    # no sigs checkpoint: the banded checkpoint inside
+    # minhash_lsh_candidates is this plan's ONLY consumer of the signature
+    # column (the verify below never needs the raw signature again)
+    sigs = minhash_signatures(
+        df, text_col, num_hashes, n, id_col=id_col, grams="word",
+        signatures_only=True,
+    )
     # materialize=True: checkpoints banded once inside and returns the
     # bounded candidate list as an eager checkpoint — it fans out to THREE
     # consumers below (the id semi-join + both verify attachments)
@@ -653,8 +614,8 @@ def ngram_jaccard_pairs_lsh(
     # checkpoint (rule 40) is pinned below — cands/ids broadcast by
     # explicit bounded-side hints, the pair join hinted merge
     cands = minhash_lsh_candidates(
-        sigs, id_col, "minhash", bands, max_bucket, hash_fn=hash_fn,
-        materialize=True, pair_gen="explode",
+        sigs, id_col, "minhash", bands, max_bucket, materialize=True,
+        pair_gen="explode",
     )
     # exact verify on candidate DOCS only: pull the gram arrays for ids in
     # the candidate list (bounded by 2 x |cands|) — the broadcast carries
